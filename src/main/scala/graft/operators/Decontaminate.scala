@@ -90,14 +90,13 @@ object Decontaminate {
   /** Driver cap for [[clean]]'s collected-index regime: when the
     * benchmark's DISTINCT gram index has at most this many hashes it is
     * collected once and membership runs as a row-local kernel; above it
-    * (or at 0 — disables) the distributed [[overlapReport]] subtree runs
-    * unchanged. Eval benchmarks are small by nature, so the collected
-    * regime is the production shape; the threshold keeps the fallback
-    * scale-safe for corpus-sized "benchmarks". Override with
-    * `-Dgraft.decon.driverMaxGrams=N`.
+    * (or with `spark.graft.driverRegime.enabled` = false, see
+    * [[graft.DriverRegime]]) the distributed [[overlapReport]] subtree
+    * runs unchanged. Eval benchmarks are small by nature, so the
+    * collected regime is the production shape; the threshold keeps the
+    * fallback scale-safe for corpus-sized "benchmarks".
     */
-  private def driverMaxGrams: Long =
-    sys.props.get("graft.decon.driverMaxGrams").map(_.toLong).getOrElse(1L << 20)
+  private val DriverMaxGrams = 1 << 20
 
   /** The corpus with every contaminated document REMOVED — the admission
     * side of [[overlapReport]] (anti join on the contaminated id set).
@@ -105,7 +104,7 @@ object Decontaminate {
     * Two regimes for the contaminated-id subtree (the decision is which
     * PLAN computes the identical id set, never what it contains):
     *
-    *  - collected index (benchmark gram index ≤ [[driverMaxGrams]]): the
+    *  - collected index (benchmark gram index ≤ [[DriverMaxGrams]]): the
     *    distinct hash index is collected and sorted once, and each corpus
     *    document answers "shares any k-gram?" row-locally
     *    ([[graft.functions.Kernels.hasSharedGram]] — binary search with
@@ -116,12 +115,13 @@ object Decontaminate {
     *    shapes — the explode dropped it, the NULL predicate drops it from
     *    the filter), so the contaminated id set — and therefore the
     *    id-keyed anti join, duplicate ids included — is identical.
-    *  - distributed (index above the cap, or cap 0): the
-    *    [[overlapReport]] broadcast-join shape, byte-identical to before.
+    *  - distributed (index above the cap, or the driver regime
+    *    disabled): the [[overlapReport]] broadcast-join shape,
+    *    byte-identical to before.
     *
-    * The regime probe is one capped `limit(max+1).collect()` job at
-    * compose time (complete under the cap — the set is deterministic;
-    * one row over — discarded, distributed regime).
+    * The regime probe is one [[graft.DriverRegime]] job at compose time
+    * (complete under the cap — the set is deterministic; one row over —
+    * discarded, distributed regime).
     */
   def clean(
       corpus0: DataFrame,
@@ -133,19 +133,11 @@ object Decontaminate {
   ): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
     val corpus = requireIds(corpus0, idCol, "Decontaminate.clean")
-    val max = driverMaxGrams
-    val collected =
-      if (max <= 0L) None
-      else {
-        val rows = benchmarkIndex(benchmark, k, textCol)
-          .limit(math.min(max + 1L, Int.MaxValue.toLong).toInt)
-          .collect()
-        if (rows.length.toLong > max) None
-        else {
-          val grams = rows.map(_.getLong(0))
-          java.util.Arrays.sort(grams)
-          Some(grams)
-        }
+    val collected = graft.DriverRegime.collectIfSmall(benchmarkIndex(benchmark, k, textCol), DriverMaxGrams)
+      .map { rows =>
+        val grams = rows.map(_.getLong(0))
+        java.util.Arrays.sort(grams)
+        grams
       }
     val contaminatedIds = collected match {
       case Some(grams) =>

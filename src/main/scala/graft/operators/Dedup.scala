@@ -451,11 +451,7 @@ object Dedup {
     * via localCheckpoint, so the result does not retain lineage into
     * `edges0`.
     */
-  def componentsOf(
-      edges0: DataFrame,
-      maxRounds: Int = 30,
-      driverMaxEdges: Long = driverComponentsMaxEdges
-  ): DataFrame = {
+  def componentsOf(edges0: DataFrame, maxRounds: Int = 30): DataFrame = {
 
     def sym(e: DataFrame): DataFrame =
       e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -497,30 +493,27 @@ object Dedup {
     // component), so both regimes produce IDENTICAL frames — spec-pinned
     // by DedupSpec's regime-equality law. Above the threshold (or for
     // non-long ids) nothing changes: the O(log n) contraction runs as
-    // before. The threshold is conf-shaped like the broadcast threshold:
-    // `-Dgraft.components.driverMaxEdges=N` (0 disables the driver path).
+    // before. The cap is DriverMaxEdges; `spark.graft.driverRegime.enabled`
+    // = false disables the driver path (graft.DriverRegime).
     //
     // Small-regime entry is ONE job (VERDICT r18 "minor" item): the
-    // capped limit+collect replaces the former checkpoint → count →
-    // collect triple — three scheduled actions per cluster gate whose
-    // first materialized the edge frame only to read it straight back.
+    // capped probe replaces the former checkpoint → count → collect
+    // triple — three scheduled actions per cluster gate whose first
+    // materialized the edge frame only to read it straight back.
     val symEdges = sym(edges0)
-    if (driverMaxEdges > 0L &&
-      symEdges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)) {
-      val capInt = math.min(driverMaxEdges, (Int.MaxValue - 1).toLong).toInt
-      val rows = symEdges.limit(capInt + 1).collect()
-      if (rows.nonEmpty && rows.length <= capInt)
-        return driverComponents(edges0.sparkSession, rows)
-      if (rows.isEmpty) {
-        // zero edges: the contraction would converge immediately to an
-        // empty label frame — produce it without the checkpoint round-trip
-        val spark = edges0.sparkSession
-        import spark.implicits._
-        return Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
+    if (symEdges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      graft.DriverRegime.collectIfSmall(symEdges, DriverMaxEdges) match {
+        case Some(rows) if rows.isEmpty =>
+          // zero edges: the contraction would converge immediately to an
+          // empty label frame — produce it without the checkpoint round-trip
+          val spark = edges0.sparkSession
+          import spark.implicits._
+          return Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
+        case Some(rows) => return driverComponents(edges0.sparkSession, rows)
+        // over the cap or disabled: fall through (the checkpoint below
+        // recomputes the frame)
+        case None => ()
       }
-      // over threshold: fall through (one probe job wasted — the rare
-      // big-regime case; the checkpoint below recomputes the frame)
-    }
     // localCheckpoint, not persist: each round's plan embeds the previous
     // round's FULL logical plan (~12 subtree references through the
     // sym/star compositions), so without lineage truncation analysis cost
@@ -546,13 +539,9 @@ object Dedup {
   /** Edge-count ceiling for [[componentsOf]]'s driver union-find regime.
     * 1M symmetric edges ≈ 16 MB of longs — the same order as a broadcast
     * relation, which is the design precedent: a decision problem this
-    * small is solved where the data already is. Override with
-    * `-Dgraft.components.driverMaxEdges=N`; 0 disables the driver path
-    * (every call then runs the distributed contraction, which the
-    * regime-equality spec uses to pin identical labels).
+    * small is solved where the data already is.
     */
-  private def driverComponentsMaxEdges: Long =
-    sys.props.get("graft.components.driverMaxEdges").map(_.toLong).getOrElse(1L << 20)
+  private val DriverMaxEdges = 1 << 20
 
   /** Exact union-find over a driver-collected symmetric edge frame —
     * [[componentsOf]]'s small regime. Roots are maintained as the MIN id

@@ -57,6 +57,11 @@ import org.apache.spark.sql.functions._
   */
 object Mondrian {
 
+  /** Joint-histogram cell ceiling for [[anonymize]]'s driver recursion
+    * (the tuple space is grid-bounded, typically a few hundred cells).
+    */
+  private val DriverMaxCells = 1 << 20
+
   /** @param df        input frame
     * @param bandCols  quasi attributes ALREADY quantized to integer band
     *                  indices (long) — `floor(value/width)` per attr;
@@ -82,16 +87,16 @@ object Mondrian {
     // runs locally in the identical integer arithmetic and the corpus is
     // touched exactly twice: one aggregate (with the same scan-side NULL
     // raise) and one broadcast route-back join — versus ~2 jobs per cut
-    // round plus a corpus re-checkpoint every chainCap rounds. Above the
-    // threshold (`-Dgraft.mondrian.driverMaxCells=N`, 0 disables) or for
-    // non-long band columns, the distributed loop below runs untouched —
-    // scale-safe by construction. Regime equality is spec-pinned
-    // (MondrianSpec: identical pid/box frames on the fixture).
-    val driverCap = sys.props.get("graft.mondrian.driverMaxCells").map(_.toLong).getOrElse(1L << 20)
+    // round plus a corpus re-checkpoint every chainCap rounds. Above
+    // DriverMaxCells (or with `spark.graft.driverRegime.enabled` =
+    // false, see graft.DriverRegime) or for non-long band columns,
+    // the distributed loop below runs untouched — scale-safe by
+    // construction. Regime equality is spec-pinned (MondrianSpec:
+    // identical pid/box frames on the fixture).
     val allLong = bandCols.forall(c =>
       df.schema(c).dataType == org.apache.spark.sql.types.LongType
     )
-    if (driverCap > 0L && allLong) {
+    if (allLong) {
       val guardedHead =
         when(
           nullGuard,
@@ -102,16 +107,16 @@ object Mondrian {
         .select(guardedHead.as(bandCols.head) +: bandCols.tail.map(col): _*)
         .groupBy(bandCols.map(col): _*)
         .agg(count(lit(1)).as("__graft_n"))
-      val capInt = math.min(driverCap, (Int.MaxValue - 1).toLong).toInt
-      val rows = hist.limit(capInt + 1).collect()
-      if (rows.length <= capInt) {
-        val cells = rows.map { r =>
-          (bandCols.indices.map(r.getLong).toArray, r.getLong(bandCols.length))
-        }
-        return driverAnonymize(df, bandCols, k, maxRounds, cells)
+      graft.DriverRegime.collectIfSmall(hist, DriverMaxCells) match {
+        case Some(rows) =>
+          val cells = rows.map { r =>
+            (bandCols.indices.map(r.getLong).toArray, r.getLong(bandCols.length))
+          }
+          return driverAnonymize(df, bandCols, k, maxRounds, cells)
+        // over threshold: fall through to the distributed loop (one probe
+        // aggregate wasted — the rare big-regime case)
+        case None => ()
       }
-      // over threshold: fall through to the distributed loop (one probe
-      // aggregate wasted — the rare big-regime case)
     }
     // the CORPUS is materialized exactly once; each round's pid
     // assignment is derived by replaying the (tiny, checkpointed) cut

@@ -1043,13 +1043,14 @@ object Similarity {
     // inlined the whole m-subspace trainer under every codebook
     // reference (~570 plan nodes / ~100 scan subtrees at m = 4 in the
     // q110 plan; the trainer alone measured 4.5 s of the gate's 5.6 s,
-    // almost all scheduling + plan machinery over micro-data). Above the
-    // threshold (`-Dgraft.trainer.driverMaxVectors`, 0 disables) — or
-    // with negative ids, whose div/mod semantics the driver path does
-    // not replicate — the distributed chains run untouched; production
-    // deployments train on a bounded sample anyway (`every`), which is
-    // exactly the regime the threshold encodes. Spec-pinned equal
-    // (AnnRecallSpec regime-equality law).
+    // almost all scheduling + plan machinery over micro-data). Above
+    // DriverMaxVectors, with `spark.graft.driverRegime.enabled` = false
+    // (graft.DriverRegime), or with negative ids, whose div/mod
+    // semantics the driver path does not replicate, the distributed
+    // chains run untouched; production deployments train on a bounded
+    // sample anyway (`every`), which is exactly the regime the
+    // threshold encodes. Spec-pinned equal (AnnRecallSpec
+    // regime-equality law).
     collectVectorsIfSmall(e) match {
       case Some(rows) => PqCodebooks(m, driverPqCodebooks(emb.sparkSession, rows, m, dsub))
       case None =>
@@ -1065,37 +1066,26 @@ object Similarity {
 
   /** Vector-count ceiling for [[trainPq]]'s driver regime: 2^17 vectors
     * × 256 B (64 float dims) ≈ 32 MB — the broadcast-relation order of
-    * magnitude, the componentsOf precedent. Override with
-    * `-Dgraft.trainer.driverMaxVectors=N`; 0 disables (the
-    * regime-equality spec pins identical codebooks that way).
+    * magnitude, the componentsOf precedent.
     */
-  private def trainerDriverMaxVectors: Long =
-    sys.props.get("graft.trainer.driverMaxVectors").map(_.toLong).getOrElse(1L << 17)
+  private val DriverMaxVectors = 1 << 17
 
   /** One collect of the fit set when it fits the driver regime —
     * `(vec_id, embedding)` rows with every id non-negative (the seed's
     * div/mod arithmetic is replicated for the non-negative case only),
     * or None.
     */
-  private def collectVectorsIfSmall(e: DataFrame): Option[Array[(Long, Array[Float])]] = {
-    val cap = trainerDriverMaxVectors
-    if (cap <= 0L) None
-    else {
-      val capInt = math.min(cap, (Int.MaxValue - 1).toLong).toInt
-      val rows = e.limit(capInt + 1).collect()
-      if (rows.length > capInt) None
+  private def collectVectorsIfSmall(e: DataFrame): Option[Array[(Long, Array[Float])]] =
+    graft.DriverRegime.collectIfSmall(e, DriverMaxVectors).flatMap { rows =>
+      if (rows.exists(_.isNullAt(0))) None
       else {
-        val out = rows.map { r =>
-          if (r.isNullAt(0)) return None
-          (r.getLong(0), r.getSeq[Float](1).toArray)
-        }
+        val out = rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         // negative ids (seed div/mod semantics) and ragged vectors (the
         // driver subspace copy zero-pads where `slice` truncates the
         // emitted rows) fall back to the distributed chains
         if (out.exists(v => v._1 < 0L || v._2.length != Dim)) None else Some(out)
       }
     }
-  }
 
   /** The exact driver replay of [[trainedCentroids]]'s chain per PQ
     * subspace: stride seed over the non-negative id space, then

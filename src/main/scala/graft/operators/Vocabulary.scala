@@ -204,14 +204,13 @@ object Vocabulary {
     * broadcast-relation order of magnitude), while every distributed
     * merge round below is a full aggregate + driver argmax collect + an
     * eager fold checkpoint of almost pure scheduling overhead at that
-    * size. Above the threshold (or with `0`, which disables the driver
-    * path — the regime-equality spec uses that to pin identical
-    * artifacts) the per-round distributed loop runs untouched, so the
-    * trainers stay scale-safe by construction at 100 TB word tables.
-    * Override with `-Dgraft.trainer.driverMaxWords=N`.
+    * size. Above the threshold (or with `spark.graft.driverRegime.enabled`
+    * = false, see [[graft.DriverRegime]] — the regime-equality spec uses
+    * that to pin identical artifacts) the per-round distributed loop runs
+    * untouched, so the trainers stay scale-safe by construction at
+    * 100 TB word tables.
     */
-  private def trainerDriverMaxWords: Long =
-    sys.props.get("graft.trainer.driverMaxWords").map(_.toLong).getOrElse(1L << 20)
+  private val DriverMaxWords = 1 << 20
 
   /** One collect of the word table when it fits the driver regime —
     * `(w, syms, cnt)` rows, or None above the threshold. One job either
@@ -221,17 +220,10 @@ object Vocabulary {
   private def collectWordsIfSmall(
       docs: DataFrame,
       textCol: String
-  ): Option[Array[(String, Array[String], Long)]] = {
-    val cap = trainerDriverMaxWords
-    if (cap <= 0L) None
-    else {
-      val capInt = math.min(cap, (Int.MaxValue - 1).toLong).toInt
-      val rows = wordTableLazy(docs, textCol).limit(capInt + 1).collect()
-      if (rows.length > capInt) None
-      else
-        Some(rows.map(r => (r.getString(0), r.getSeq[String](1).toArray, r.getLong(2))))
-    }
-  }
+  ): Option[Array[(String, Array[String], Long)]] =
+    graft.DriverRegime
+      .collectIfSmall(wordTableLazy(docs, textCol), DriverMaxWords)
+      .map(_.map(r => (r.getString(0), r.getSeq[String](1).toArray, r.getLong(2))))
 
   /** Spark's string ordering is unsigned UTF-8 byte order (UTF8String
     * binary compare) — Java's String.compareTo is UTF-16 code-unit

@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * make `load` the only scan primitive the whole engine needs for file data.
   */
 object Tables {
-  val dimensions: Seq[String] = Seq("region", "nation", "customer", "supplier", "part")
-  val facts: Seq[String] = Seq("orders", "lineitem", "events")
-  val llm: Seq[String] = Seq("documents", "embeddings")
-  val all: Seq[String] = dimensions ++ facts ++ llm
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir) else spark.read.parquet(s"$dir/$name.parquet")
@@ -71,10 +67,4 @@ object Tables {
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
-
-  /** Register every table as a temp view so `spark.sql` mirrors the DuckDB
-    * oracle's view of the data exactly.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -93,7 +93,7 @@ class AnnRecallSpec extends SparkSpec {
   test("trainPq regime equality: driver Lloyd replay == distributed chains, bit for bit") {
     // the driver regime replays the per-subspace Lloyd chain locally
     // (exact cosine fold, heap-order argmax, integer-quantized means);
-    // disabling it (cap 0) runs the distributed trainer — the codebooks
+    // disabling it runs the distributed trainer — the codebooks
     // and the full ADC ranking must be IDENTICAL
     val emb = Tables.load(spark, Sf001, "embeddings")
     def cb(df: org.apache.spark.sql.DataFrame) =
@@ -106,16 +106,9 @@ class AnnRecallSpec extends SparkSpec {
       .toSet
     val viaDriver = cb(Similarity.trainPq(emb).codebooks)
     val adcDriver = adc()
-    val prev = sys.props.put("graft.trainer.driverMaxVectors", "0")
-    try {
+    withDriverRegimeOff {
       assert(viaDriver === cb(Similarity.trainPq(emb).codebooks))
       assert(adcDriver === adc())
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.trainer.driverMaxVectors", v)
-        case None    => sys.props.remove("graft.trainer.driverMaxVectors")
-      }
-      ()
     }
   }
 

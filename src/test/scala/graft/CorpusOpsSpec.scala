@@ -78,20 +78,12 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("decontaminate: regime equality — collected-index clean == distributed clean, row for row") {
     // the collected regime answers membership row-locally against the
-    // sorted driver copy of the benchmark index; cap 0 runs the former
-    // broadcast-join subtree — the kept frames must be identical
+    // sorted driver copy of the benchmark index; the distributed regime
+    // runs the former broadcast-join subtree — the kept frames must be
+    // identical
     val viaKernel = Decontaminate.clean(corpus, benchmark, 4).collect().toSet
-    val prev = sys.props.put("graft.decon.driverMaxGrams", "0")
-    try {
-      val viaCluster = Decontaminate.clean(corpus, benchmark, 4).collect().toSet
-      assert(viaKernel === viaCluster)
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.decon.driverMaxGrams", v)
-        case None    => sys.props.remove("graft.decon.driverMaxGrams")
-      }
-      ()
-    }
+    val viaCluster = withDriverRegimeOff(Decontaminate.clean(corpus, benchmark, 4).collect().toSet)
+    assert(viaKernel === viaCluster)
     // and clean + overlapReport still partition the corpus in the kernel regime
     val contaminated = Decontaminate.overlapReport(corpus, benchmark, 4).select("doc_id")
     val kept = Decontaminate.clean(corpus, benchmark, 4).select("doc_id")
@@ -358,6 +350,31 @@ class CorpusOpsSpec extends SparkSpec {
     val seg = Vocabulary.wordpieceSegmentations(docs, 2)
     val prof = Vocabulary.bpeProfile(docs, seg).as[(Long, Long, Long)].head()
     assert(prof === ((1L, 2L, 2L))) // two words, each one fused symbol
+  }
+
+  test("merge trainers regime equality: driver replay == distributed rounds, UTF-8 ties included") {
+    import graft.operators.Vocabulary
+    // (ｆ,a) and (😀,a) tie in count and in WordPiece score. Spark orders
+    // strings by UTF-8 bytes (ｆ = EF BD 86 < 😀 = F0 9F 98 80) where
+    // String.compareTo orders UTF-16 units (😀's D83D < FF46), so the
+    // driver argmax must break the tie the way the distributed orderBy does
+    val docs = Seq((1L, "😀a ｆa low lower 😀a lowest ｆa low"), (2L, "newer wider"))
+      .toDF("doc_id", "text")
+    def merges(df: org.apache.spark.sql.DataFrame) = df.as[(Long, String, String, Long)].collect().toSeq
+    def segs(df: org.apache.spark.sql.DataFrame) = df.as[(String, Seq[String], Long)].collect().toSet
+    def artifacts() = (
+      merges(Vocabulary.bpeMerges(docs, 8)),
+      segs(Vocabulary.bpeSegmentations(docs, 8)),
+      merges(Vocabulary.wordpieceMerges(docs, 8)),
+      segs(Vocabulary.wordpieceSegmentations(docs, 8))
+    )
+    val viaDriver = artifacts()
+    assert(viaDriver === withDriverRegimeOff(artifacts()))
+    // the tie is really exercised: both pairs merge, ｆ first
+    for (m <- Seq(viaDriver._1, viaDriver._3)) {
+      val order = m.collect { case (_, l, "a", _) if l == "ｆ" || l == "😀" => l }
+      assert(order === Seq("ｆ", "😀"))
+    }
   }
 
   test("benchmarkExposure: the reverse direction agrees with overlapReport's totals") {

@@ -121,12 +121,8 @@ class DedupSpec extends SparkSpec {
     // Graph shapes chosen to stress both: a deep chain (diameter ~ n), a
     // clique (diameter 1), disjoint pairs, a hub star, and a seeded
     // random graph; ids deliberately non-contiguous and out of order.
-    def labelsOf(edges: Seq[(Long, Long)], driverMax: Long): Map[Long, Long] =
-      Dedup
-        .componentsOf(edges.toDF("u", "v"), driverMaxEdges = driverMax)
-        .as[(Long, Long)]
-        .collect()
-        .toMap
+    def labelsOf(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      Dedup.componentsOf(edges.toDF("u", "v")).as[(Long, Long)].collect().toMap
     val chain = (0 until 80).map(i => (i * 7L + 3, (i + 1) * 7L + 3))
     val clique = for (a <- 0 until 12; b <- a + 1 until 12) yield (1000L + a, 1000L + b)
     val pairs = (0 until 20).map(i => (2000L + 2 * i, 2001L + 2 * i))
@@ -134,16 +130,16 @@ class DedupSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     val random = (0 until 300).map(_ => (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
     for (g <- Seq(chain, clique, pairs, hub, random, chain ++ clique ++ pairs ++ hub)) {
-      val driver = labelsOf(g, Long.MaxValue)
-      val distributed = labelsOf(g, 0L)
+      val driver = labelsOf(g)
+      val distributed = withDriverRegimeOff(labelsOf(g))
       assert(driver == distributed, s"regime labels diverged on ${g.take(3)}...")
       // and the labels really are the min member of each component
       val byCluster = driver.groupBy(_._2).view.mapValues(_.keys.min).toMap
       assert(byCluster.forall { case (label, minMember) => label == minMember })
     }
     // self-loop-only vertices vanish in BOTH regimes (sym filters u == v)
-    val selfOnly = labelsOf(Seq((5L, 5L), (7L, 8L)), Long.MaxValue)
-    assert(selfOnly == labelsOf(Seq((5L, 5L), (7L, 8L)), 0L))
+    val selfOnly = labelsOf(Seq((5L, 5L), (7L, 8L)))
+    assert(selfOnly == withDriverRegimeOff(labelsOf(Seq((5L, 5L), (7L, 8L)))))
     assert(selfOnly == Map(7L -> 7L, 8L -> 7L))
   }
 

@@ -97,25 +97,13 @@ class MondrianSpec extends SparkSpec {
 
   test("regime equality: driver histogram recursion == distributed cut loop, row for row") {
     // the driver path keys every decision off the joint band histogram;
-    // disabling it (cap 0) runs the distributed per-round loop — both
-    // must produce the identical (id, pid, boxes, cell_n, ok) frame
+    // disabling it runs the distributed per-round loop — both must
+    // produce the identical (id, pid, boxes, cell_n, ok) frame
     val df = (0L until 300L).map(i => (i, (i * 37L) % 16L, (i * 53L) % 10L)).toDF("id", "a", "b")
-    val viaDriver = Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
+    def boxes() = Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
       .select("id", "pid", "cell_n", "a_lo", "a_hi", "b_lo", "b_hi", "ok")
       .collect().toSet
-    val prev = sys.props.put("graft.mondrian.driverMaxCells", "0")
-    try {
-      val viaCluster = Mondrian.anonymize(df, Seq("a", "b"), 7L, 6)
-        .select("id", "pid", "cell_n", "a_lo", "a_hi", "b_lo", "b_hi", "ok")
-        .collect().toSet
-      assert(viaDriver === viaCluster)
-    } finally {
-      prev match {
-        case Some(v) => sys.props.put("graft.mondrian.driverMaxCells", v)
-        case None    => sys.props.remove("graft.mondrian.driverMaxCells")
-      }
-      ()
-    }
+    assert(boxes() === withDriverRegimeOff(boxes()))
   }
 
   test("fail-fasts: NULL band, bad params") {

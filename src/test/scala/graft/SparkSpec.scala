@@ -12,4 +12,15 @@ trait SparkSpec extends AnyFunSuite {
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"
   val testOut = "/root/repo/target/test-out"
+
+  /** Run `f` with every operator's driver regime off
+    * (`spark.graft.driverRegime.enabled=false`, see [[DriverRegime]]), so a
+    * regime-equality law can compare both paths; the key is unset
+    * afterwards, even on failure.
+    */
+  def withDriverRegimeOff[T](f: => T): T = {
+    spark.conf.set(DriverRegime.EnabledKey, "false")
+    try f
+    finally spark.conf.unset(DriverRegime.EnabledKey)
+  }
 }
